@@ -102,7 +102,9 @@ def render(
             )
 
     if fmt == "json":
-        rows = capped.toJSON().collect()
+        # one Arrow collect of to_json strings: the same bytes as toJSON(),
+        # whose RDD collect runs a limited multi-partition scan as two jobs
+        rows = capped.select(F.to_json(F.struct("*"))).toArrow().column(0).to_pylist()
         guard(len(rows))
         return ("[" + ",".join(rows) + "]").encode()
     if fmt == "array":

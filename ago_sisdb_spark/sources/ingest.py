@@ -19,6 +19,8 @@ rewrite small files into size-targeted ones, preserving the sort.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,7 +79,6 @@ def compact(
     (`workers/sisdb/sisdb.h:184-189`).
     """
     import math
-    import os
     import shutil
 
     df = spark.read.parquet(path)
@@ -168,10 +169,13 @@ def incremental_rollup(
     src = spark.read.parquet(src_path)
     if "dt" not in src.columns:
         raise ValueError("source must be dt-partitioned (materialize_table)")
-    try:
-        done = spark.read.parquet(dst_path).agg(F.max("dt")).first()[0]
-    except Exception:
-        done = None
+    # only a missing destination means "nothing rolled up yet"; an
+    # unreadable one raises rather than silently recomputing every partition
+    done = (
+        spark.read.parquet(dst_path).agg(F.max("dt")).first()[0]
+        if os.path.exists(dst_path)
+        else None
+    )
     fresh = src.where(F.col("dt") >= F.lit(done)) if done is not None else src
     if fresh.head(1) == []:
         return 0

@@ -17,6 +17,15 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"
 
 
+@pytest.fixture(scope="session", autouse=True)
+def git_hooks():
+    """Install the repo's pre-commit hook (untracked, so a fresh clone lacks
+    it) through the same tracked installer ``tools/run_all.py`` uses."""
+    from tools.install_hooks import ensure_hooks
+
+    ensure_hooks()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

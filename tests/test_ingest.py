@@ -179,3 +179,39 @@ def test_incremental_rollup_converges_on_late_watermark_day_data(spark, tmp_path
     assert len(bars) == 2
     assert bars[base].open == 10.0 and bars[base].close == 21.0  # hour 9 refreshed
     assert bars[base + timedelta(hours=1)].close == 27.0
+
+
+def test_incremental_rollup_raises_on_corrupt_destination(spark, tmp_path):
+    """Only a missing destination means "nothing rolled up yet": an
+    unreadable one raises instead of silently recomputing every partition."""
+    import os
+    from datetime import datetime, timedelta
+
+    from ago_sisdb_spark.sources.ingest import incremental_rollup
+
+    src = str(tmp_path / "ticks")
+    dst = str(tmp_path / "bars")
+    base = datetime(2024, 1, 1, 9, 0, 0)
+    rows = [("A", base + timedelta(minutes=5 * i), 10.0 + i, i) for i in range(12)]
+    (
+        spark.createDataFrame(rows, "sym string, ts timestamp, px double, seq int")
+        .withColumn("dt", F.to_date("ts"))
+        .write.partitionBy("dt")
+        .parquet(src)
+    )
+    assert incremental_rollup(spark, src, dst, ["sym"], "ts", "px", "1 hour", "seq") == 1
+    corrupt = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(dst)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    for p in corrupt:
+        with open(p, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        incremental_rollup(spark, src, dst, ["sym"], "ts", "px", "1 hour", "seq")
+    # nothing was recomputed over the unreadable destination
+    for p in corrupt:
+        with open(p, "rb") as fh:
+            assert fh.read() == b"not a parquet file"
